@@ -12,7 +12,19 @@ def spark():
     # correctness — 8 threads cut the heavy shuffle/iteration tests'
     # turnaround on a 32-core box; shuffle_partitions stays 4 so the
     # plan-pin tests see the same exchanges
-    extra = json.loads(os.environ.get("TEST_SPARK_EXTRA", "{}"))
+    # TEST_SPARK_EXTRA: a JSON object of extra Spark conf.  It only applies
+    # to the FIRST session created in the pytest process — get_spark ends
+    # in getOrCreate(), which ignores new conf once a session exists
+    raw = os.environ.get("TEST_SPARK_EXTRA", "{}")
+    try:
+        extra = json.loads(raw)
+        if not isinstance(extra, dict):
+            raise ValueError("not a JSON object")
+    except ValueError as exc:  # json.JSONDecodeError is a ValueError
+        raise ValueError(
+            f"TEST_SPARK_EXTRA must be a JSON object of Spark conf ({exc}):"
+            f" {raw!r}"
+        ) from exc
     s = get_spark(
         "tundradb-spark-tests", cpus=8, shuffle_partitions=4,
         extra_conf=extra,

@@ -264,3 +264,19 @@ def test_show_edge_types_single_lazy_plan(jdb):
         ("LIKES", 1),
         ("WORKS_AT", 2),
     }
+
+
+def test_compact_materializes_at_the_call(jdb, spark):
+    # explicit compact() does its work at the chosen point (and surfaces
+    # any failure of the old lineage there); mutation paths stay lazy
+    jdb.update_by_id("users", 0, {"age": 26})
+    sc = spark.sparkContext
+    group = "compact-eager-probe"
+    sc.setJobGroup(group, "assert compact() materializes at the call")
+    try:
+        jdb.compact("users")
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setJobGroup(None, None)
+    assert jobs, "compact() deferred its materialization to a later read"
+    assert rows_set(jdb.get_table("users").filter("id = 0"), "age") == {(26,)}

@@ -199,6 +199,19 @@ class TestSssp:
         out = {r["vertex"]: r["dist"] for r in sssp(e, s).collect()}
         assert out[9] == 3.0
 
+    def test_nonconvergence_raises(self, spark):
+        """Exhausting max_iters while distances still improve is an ERROR
+        (as in connected_components and k_core), never a silently
+        partial distance table."""
+        from tundradb_spark.graphs.algorithms import sssp
+
+        e = spark.createDataFrame(
+            [(i, i + 1, 1.0) for i in range(29)], "src long, dst long, w double"
+        )
+        s = spark.createDataFrame([(0,)], "vertex long")
+        with pytest.raises(RuntimeError, match="did not converge"):
+            sssp(e, s, max_iters=3)
+
 
 class TestPersonalizedPagerank:
     def test_locality_and_mass(self, spark):
@@ -499,3 +512,41 @@ class TestKCoreFixpoint:
         )
         with pytest.raises(RuntimeError, match="fixpoint"):
             k_core(df, 2, max_iters=2)
+
+
+class TestJobBudget:
+    """Spark jobs each loop runs to build AND collect its result on one
+    fixed small graph, pinned at the counts measured before the loops moved
+    onto the shared superstep driver (local[8], 4 shuffle partitions, AQE
+    on).  Counted with a job group, the tests/test_text.py pattern: every
+    job submitted while the group is active lands in it."""
+
+    def test_loops_within_job_budget(self, spark):
+        e = spark.createDataFrame(
+            [(0, 1, 1.0), (1, 2, 1.0), (2, 3, 1.0), (1, 4, 3.0), (0, 4, 5.0)],
+            "src long, dst long, w double",
+        )
+        s = spark.createDataFrame([(0,)], "vertex long")
+        pairs = spark.createDataFrame(
+            [(1, 2), (2, 3), (3, 4), (10, 11)], "id_a long, id_b long"
+        )
+        cases = [  # (name, job budget, build, expected rows)
+            ("bfs_levels", 30, lambda: ga.bfs_levels(e, s),
+             {(0, 0), (1, 1), (2, 2), (3, 3), (4, 1)}),
+            ("sssp", 33, lambda: ga.sssp(e, s),
+             {(0, 0.0), (1, 1.0), (2, 2.0), (3, 3.0), (4, 4.0)}),
+            ("connected_components", 19,
+             lambda: ga.connected_components(pairs),
+             {(1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10)}),
+        ]
+        sc = spark.sparkContext
+        for name, budget, build, expected in cases:
+            group = f"graph-job-budget-{name}"
+            sc.setJobGroup(group, f"count {name} jobs")
+            try:
+                rows = build().collect()
+                jobs = sc.statusTracker().getJobIdsForGroup(group)
+            finally:
+                sc.setJobGroup(None, None)
+            assert set(map(tuple, rows)) == expected, name
+            assert len(jobs) <= budget, (name, len(jobs))

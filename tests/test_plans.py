@@ -627,6 +627,23 @@ def test_quantizer_sidecar_file_uri_lands_in_index_dir(tmp_path):
         assert not os.path.exists(f"./file:{d}")
 
 
+def test_quantizer_sidecar_unreadable_raises(spark, tmp_path, monkeypatch):
+    # a non-local sidecar that EXISTS but cannot be read raises instead of
+    # passing for "no quantizer"; file:// URIs stand in for a remote
+    # filesystem by routing them through the Hadoop branch
+    from tundradb_spark.pipeline import similarity
+
+    monkeypatch.setattr(similarity, "_local_path", lambda path: None)
+    d = tmp_path / "idx"
+    uri = f"file://{d}"
+    assert similarity.load_quantizer(uri, spark) is None
+    similarity.save_quantizer(uri, {"kind": "lsh", "planes": 8}, spark)
+    assert similarity.load_quantizer(uri, spark) == {"kind": "lsh", "planes": 8}
+    (d / "_quantizer" / "part-99999.txt.gz").write_bytes(b"not gzip data")
+    with pytest.raises(Exception, match="(?i)gzip"):
+        similarity.load_quantizer(uri, spark)
+
+
 def test_cdc_chunks_no_shuffle(spark):
     # content-defined chunking must stay a narrow per-row plan: boundary
     # arrays via one filter(sequence(...)) lambda, the only row expansion

@@ -608,6 +608,42 @@ class TestStreamIngestDedup:
         assert {r["doc_id"] for r in spark.read.parquet(sig).collect()} == {0, 1}
 
 
+    def test_unreadable_corpus_fails_the_epoch(self, spark, tmp_path):
+        # a signature table that exists but cannot be read (here: corrupt
+        # parquet footers) must fail the epoch — treating it as "no
+        # corpus" would silently admit this batch's duplicates
+        from tundradb_spark.streaming import stream_ingest_dedup
+
+        src, out, sig, ckpt = (
+            str(tmp_path / d) for d in ("csrc", "cout", "csig", "cck")
+        )
+        os.makedirs(src)
+        schema = "doc_id long, text string"
+        text = "the quick brown fox jumps over the lazy dog"
+        spark.createDataFrame([(0, text)], schema).coalesce(1).write.mode(
+            "append").parquet(src)
+        stream = spark.readStream.schema(schema).option(
+            "maxFilesPerTrigger", 1).parquet(src)
+        q = stream_ingest_dedup(stream, out, sig, ckpt)
+        try:
+            q.processAllAvailable()
+            for root, _, files in os.walk(sig):
+                for f in files:
+                    path = os.path.join(root, f)
+                    if f.endswith(".crc"):
+                        os.remove(path)
+                    elif f.endswith(".parquet"):
+                        with open(path, "wb") as fh:
+                            fh.write(b"not a parquet file")
+            spark.createDataFrame([(1, text)], schema).coalesce(1).write.mode(
+                "append").parquet(src)
+            with pytest.raises(Exception, match="(?i)parquet"):
+                q.processAllAvailable()
+        finally:
+            q.stop()
+        assert [r["doc_id"] for r in spark.read.parquet(out).collect()] == [0]
+
+
 class TestStreamHllRegisters:
     def test_stream_merge_equals_batch_sketch(self, spark, tmp_path):
         from tundradb_spark.pipeline.sketches import hll_distinct

@@ -863,7 +863,7 @@ class Database:
             tables = list(self._nodes.values()) + list(self._edges.values())
         for t in tables:
             if t.frame is not None:
-                t.frame = _checkpoint(t.frame)
+                t.frame = _checkpoint(t.frame, eager=True)
 
     # -------------------------------------------------------------- snapshot
     def commit(self) -> str:
@@ -887,8 +887,13 @@ class Database:
         return gc_snapshots(self.path, keep_last=keep_last)
 
 
-def _checkpoint(df: DataFrame) -> DataFrame:
+def _checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
     """Materialize a frame and cut its lineage.
+
+    ``eager=True`` pays the materialization at the call (explicit
+    :meth:`Database.compact`, whose contract is to do the work at a
+    chosen quiet point and surface any failure of the old lineage
+    there); mutation paths stay lazy (see the local branch below).
 
     Uses the RELIABLE checkpoint dir when one is configured
     (``sc.setCheckpointDir`` — cluster deployments: blocks survive executor
@@ -927,14 +932,13 @@ def _checkpoint(df: DataFrame) -> DataFrame:
         # recomputes the frame a second time to write the checkpoint
         # files unless it was cached first — the eager form avoids that
         return df.checkpoint(eager=True)
-    # LAZY local checkpoint (r15, the r14 graph-loop discipline applied
-    # to DML): every mutation path follows its compaction with a count
-    # action (hit/changed detection), which materializes the blocks as a
-    # side effect — the eager form paid one extra scheduling round-trip
-    # per mutation for the same materialization.  Callers with no
-    # immediate action (explicit compact(), unversioned delete) simply
-    # defer the same one-time materialization to the table's next read.
-    return df.localCheckpoint(eager=False)
+    # LAZY local checkpoint for mutation paths: each follows its
+    # compaction with a count action (hit/changed detection), which
+    # materializes the blocks as a side effect — the eager form paid one
+    # extra scheduling round-trip per mutation for the same
+    # materialization.  The unversioned delete defers it to the table's
+    # next read.
+    return df.localCheckpoint(eager=eager)
 
 
 #: monotonically_increasing_id layout: partition id in the high bits, the

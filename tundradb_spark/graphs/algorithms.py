@@ -6,15 +6,15 @@ Implemented directly as iterative DataFrame programs (GraphFrames is not a
 container dependency) with the standard scale disciplines:
 
 - each iteration is one shuffle on the vertex/edge key;
+- every iterative algorithm is a step function run by ONE superstep
+  loop, :func:`_supersteps` (the Pregel shape GraphX runs on a dataflow
+  engine), which owns the round loop, the convergence probe, the early
+  exit and the non-convergence error;
 - iteration state is ``localCheckpoint``-ed every round to cut the growing
   lineage (without it, round k re-executes rounds 1..k-1 — quadratic work
-  and an eventual stack overflow in the planner); checkpoints are LAZY
-  (r14 optimization round): loops with a per-round action (convergence
-  count) materialize them as a side effect of that action, and
-  fixed-iteration loops chain every round into the single final job —
-  either way the eager variant's one extra scheduling round-trip per
-  frame per round is gone, and the blocks still materialize exactly once;
-- convergence checks are single scalar aggregations, not collects of data.
+  and an eventual stack overflow in the planner);
+- a convergence check is one ``isEmpty`` probe of the round's change set,
+  never a collect of data.
 
 ``connected_components`` composes with the dedup operators: the duplicate
 PAIRS from minhash/simhash/embedding LSH become duplicate CLUSTERS (pick
@@ -23,7 +23,45 @@ PAIRS from minhash/simhash/embedding LSH become duplicate CLUSTERS (pick
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+import itertools
+from typing import Any, Callable
+
+from pyspark.sql import DataFrame, Window, functions as F
+
+
+def _supersteps(
+    step: Callable[[Any], tuple[Any, DataFrame | None]],
+    state: Any,
+    rounds: int | None,
+    name: str | None = None,
+) -> Any:
+    """Run ``step`` for at most ``rounds`` supersteps (``None``: until the
+    fixpoint) and return the final state.
+
+    ``step(state)`` returns ``(new_state, changes)``: ``changes`` is a
+    DataFrame that is empty exactly at the fixpoint, or ``None`` for a
+    round with no check.  Each checked round costs one ``isEmpty()``
+    probe; an empty change set ends the run with that round's state.
+
+    A NAMED run that exhausts ``rounds`` with the last change set still
+    non-empty RAISES: an unconverged labeling or distance table is a
+    wrong answer, not an approximation.  Unnamed runs (fixed-round and
+    capped modes) return the last state.
+
+    Step functions mark each round's state ``localCheckpoint(eager=
+    False)``; under AQE on Spark 4.1.2 that call runs the jobs up to the
+    frame's last exchange at the call site.
+    """
+    for _ in range(rounds) if rounds is not None else itertools.count():
+        state, changes = step(state)
+        if changes is not None and changes.isEmpty():
+            return state
+    if name is not None:
+        raise RuntimeError(
+            f"{name} did not converge: no fixpoint within max_iters={rounds}"
+            f" rounds; raise max_iters rather than use a partial result"
+        )
+    return state
 
 
 def _sym_edges(pairs: DataFrame, src: str, dst: str) -> DataFrame:
@@ -32,6 +70,27 @@ def _sym_edges(pairs: DataFrame, src: str, dst: str) -> DataFrame:
     return e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).filter(
         F.col("u") != F.col("v")
     ).distinct()
+
+
+def _directed(
+    edges: DataFrame, src: str, dst: str, extra: DataFrame | None = None
+) -> tuple[DataFrame, DataFrame, int]:
+    """Deduped directed edges ``(u, v)``, their vertex set (plus the
+    ``extra`` vertices) and its size — the loop-invariant frames of the
+    power iterations, checkpointed once per fit so no round replays the
+    source scan or the distinct shuffle."""
+    e = (
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+    verts = e.select(F.col("u").alias("vertex")).union(
+        e.select(F.col("v").alias("vertex"))
+    )
+    if extra is not None:
+        verts = verts.union(extra)
+    verts = verts.distinct().localCheckpoint(eager=False)
+    return e, verts, verts.count()
 
 
 def connected_components(
@@ -43,61 +102,41 @@ def connected_components(
 ) -> DataFrame:
     """Label every vertex with the MIN vertex id reachable from it.
 
-    Min-label propagation WITH POINTER JUMPING (r13): each round every
-    vertex takes the minimum of its own label and its neighbors' labels
-    (one edge join + groupBy), then follows its label's label (one
-    label-table self-join — Shiloach-Vishkin-style shortcutting), so
-    label distance to the component minimum roughly halves per round on
-    top of the one-hop spread.  Rounds needed ≈ log₂(diameter) instead
-    of diameter — dedup near-cliques still converge in 2-3 rounds, and
-    a 10⁶-vertex PATH (the worst case that silently exhausted the old
-    diameter-bound loop at max_iters=50) now needs ~20.
+    Min-label propagation WITH POINTER JUMPING: each round every vertex
+    takes the minimum of its own label and its neighbors' labels (one
+    edge join + groupBy), then follows its label's label (one label-table
+    self-join — Shiloach-Vishkin-style shortcutting), so label distance
+    to the component minimum roughly halves per round on top of the
+    one-hop spread.  Rounds needed ≈ log₂(diameter) instead of diameter —
+    dedup near-cliques converge in 2-3 rounds, a 10⁶-vertex PATH in ~20.
 
-    NON-CONVERGENCE IS AN ERROR (r13): if labels are still changing
-    after ``max_iters`` rounds the function RAISES instead of returning
-    a partially-propagated labeling — an unconverged result silently
+    NON-CONVERGENCE IS AN ERROR: if labels are still changing after
+    ``max_iters`` rounds the function RAISES instead of returning a
+    partially-propagated labeling — an unconverged result silently
     splits components, which under-merges dedup clusters and, worse,
     lets near-duplicates straddle train/val/test in
-    ``sampling.leakage_safe_split`` (the exact leak that operator
-    exists to close).  Raise ``max_iters`` for pathological graphs.
+    ``sampling.leakage_safe_split`` (the exact leak that operator exists
+    to close).  Raise ``max_iters`` for pathological graphs.
 
     ``presymmetrized=True`` declares ``pairs`` an ALREADY symmetrized,
     deduped, materialized (u, v) edge list — callers running several
     algorithms over the same pair graph (q_dup_clusters: CC + LPA) build
-    ``_sym_edges(...).localCheckpoint(eager=False)`` once instead of paying the
+    ``_sym_edges(...).localCheckpoint()`` once instead of paying the
     symmetrize-distinct shuffle and its checkpoint per algorithm.
 
     Returns ``(vertex, component)`` — component = min id of the cluster.
     """
-    # checkpoints are LAZY (r14 optimization round): every round already
-    # ends in a driver action (the `changed` count), which materializes
-    # the marked frame as a side effect — eager checkpoints paid one
-    # extra scheduling round-trip per frame per round for the same
-    # materialization (A/B at sf0.1 over the MinHash pair graph:
-    # best 3.56 -> 2.65 s, outputs identical)
-    if presymmetrized:
-        edges = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    else:
-        # symmetrize WITHOUT _sym_edges' dedup shuffle (r14 optimization
-        # round): every aggregate this loop takes over edges is a MIN —
-        # duplicate-invariant — so the distinct bought nothing but a full
-        # exchange of the edge list before round 1 (A/B at sf0.1: best
-        # 2.65 -> 2.37 s; labelings identical, including on an input with
-        # repeated pairs).  degrees()/label_propagation keep _sym_edges'
-        # distinct — their COUNT aggregates are not duplicate-invariant.
-        e = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    edges = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    if not presymmetrized:
+        # no distinct: every aggregate below is a MIN, which duplicate
+        # edges cannot change
         edges = (
-            e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+            edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
             .filter(F.col("u") != F.col("v"))
             .localCheckpoint(eager=False)
         )
-    # seed each vertex with its 1-hop neighborhood minimum instead of the
-    # identity label (r14 optimization round): the groupBy costs the same
-    # one shuffle the old `distinct` init paid, but starts the loop in
-    # exactly the state round 1's neighbor-min step would have produced —
-    # one fewer full round (2 joins + checkpoint + count action) on every
-    # graph (A/B at sf0.1 over the MinHash pair graph: best 2.46 -> 1.93 s;
-    # labelings identical, including on a 300-vertex path)
+    # seeded with each vertex's 1-hop neighborhood minimum: exactly the
+    # state round 1 would produce from identity labels, one round cheaper
     labels = (
         edges.groupBy(F.col("u").alias("vertex"))
         .agg(F.min("v").alias("__nb"))
@@ -107,21 +146,12 @@ def connected_components(
         )
         .localCheckpoint(eager=False)
     )
-    # frontier-restricted propagation (r15, r14 verdict item 7 / guide
-    # §2.3 "shuffle fewer bytes"): only labels that DECREASED last round
-    # can lower a neighbor this round — a neighbor v untouched since
-    # round j had its label folded into every u∈N(v) in round j+1, so
-    # the full edges⨝labels join re-shipped bytes that could not change
-    # the min.  Joining edges against the changed subset only produces
-    # the identical label table every round (per-round equality pinned
-    # by tests on dup/path/self-loop graphs) while the joined bytes
-    # shrink monotonically with the frontier.  Round 1's frontier is the
-    # whole seeded label table — every seed label is new by definition.
-    frontier = labels
-    changed = 1
-    for _ in range(max_iters):
-        # neighbor labels: min label among CHANGED neighbors (identical
-        # to the min over all neighbors — see frontier note above)
+
+    def step(state):
+        labels, frontier = state
+        # only labels that DECREASED last round can lower a neighbor, so
+        # the min over the frontier equals the min over all neighbors
+        # (round 1's frontier is the whole seeded table)
         nbr = (
             edges.join(frontier, edges["v"] == frontier["vertex"], "inner")
             .groupBy(F.col("u").alias("vertex"))
@@ -134,45 +164,27 @@ def connected_components(
                 F.col("component"), F.coalesce("nbr_min", F.col("component"))
             ).alias("__c1"),
         )
-        # pointer jump: follow my label's label (labels are always vertex
-        # ids, so __c1 resolves against the same table) — halves label
-        # distance to the component minimum every round
+        # pointer jump: follow my label's label (labels are vertex ids, so
+        # __c1 resolves against the same table)
         par = stepped.select(
             F.col("vertex").alias("__pv"), F.col("__c1").alias("__pc")
         )
-        new_labels = (
+        jumped = F.least(F.col("__c1"), F.coalesce("__pc", F.col("__c1")))
+        new = (
             stepped.join(par, stepped["__c1"] == par["__pv"], "left")
             .select(
                 "vertex",
-                F.least(
-                    F.col("__c1"), F.coalesce("__pc", F.col("__c1"))
-                ).alias("component"),
-                (
-                    F.least(
-                        F.col("__c1"), F.coalesce("__pc", F.col("__c1"))
-                    )
-                    < F.col("__old")
-                ).alias("changed"),
+                jumped.alias("component"),
+                (jumped < F.col("__old")).alias("changed"),
             )
             .localCheckpoint(eager=False)
         )
-        changed = new_labels.filter("changed").limit(1).count()
-        labels = new_labels.drop("changed")
-        # next round's frontier: the rows whose component just decreased
-        # (a lazy filter over the round's already-materialized checkpoint)
-        frontier = new_labels.filter("changed").select("vertex", "component")
-        if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"connected_components did not converge within max_iters="
-            f"{max_iters} rounds (labels were still changing) — the graph's"
-            f" effective diameter exceeds the budget even with pointer"
-            f" jumping; raise max_iters rather than consuming a"
-            f" partially-merged labeling (it under-merges dedup clusters"
-            f" and leaks near-duplicates across splits)"
-        )
-    return labels
+        changed = new.filter("changed").select("vertex", "component")
+        return (new.drop("changed"), changed), changed
+
+    return _supersteps(
+        step, (labels, labels), max_iters, "connected_components"
+    )[0]
 
 
 def dedup_clusters(
@@ -196,17 +208,74 @@ def degrees(pairs: DataFrame, src: str = "id_a", dst: str = "id_b") -> DataFrame
     )
 
 
-def _l1_delta(cur: DataFrame, prev: DataFrame, val: str) -> float:
-    """Σ|cur − prev| over the shared vertex set — one join + a 1-row
-    aggregate (bounded collect)."""
-    row = (
-        cur.join(
-            prev.withColumnRenamed(val, "__prev"), "vertex", "inner"
+def _power_iteration(
+    e: DataFrame,
+    pv: DataFrame,
+    n: int,
+    damping: float,
+    iters: int,
+    tol: float | None,
+) -> DataFrame:
+    """The power-iteration core of :func:`pagerank` and
+    :func:`personalized_pagerank` over edges ``e`` and the reset vector
+    ``pv = (vertex, p)``: ``rank' = (1-d)·p + d·(recv + dangling·p/n)``.
+    Standard PageRank is the uniform ``p = 1.0`` case (``x * 1.0 == x``,
+    so its ranks are bit-identical to the unpersonalized formula).
+
+    Each round: one join (rank × out-degree) + one destination groupBy,
+    checkpointed.  Dangling mass (rank not passed along any edge) is a
+    lazy 1-row aggregate crossJoined in, never collected, so ranks sum to
+    ``n`` every round.  With ``tol`` the round's change set is its L1
+    rank delta as a 1-row aggregate, kept while ``>= tol``."""
+    outdeg = e.groupBy(F.col("u").alias("vertex")).agg(
+        F.count(F.lit(1)).alias("outdeg")
+    ).localCheckpoint(eager=False)
+
+    def step(ranks):
+        contribs = (
+            e.join(ranks, e["u"] == ranks["vertex"], "inner")
+            .join(outdeg, "vertex", "inner")
+            .select(
+                F.col("v").alias("vertex"),
+                (F.col("rank") / F.col("outdeg")).alias("c"),
+            )
+            .groupBy("vertex")
+            .agg(F.sum("c").alias("recv"))
         )
-        .agg(F.sum(F.abs(F.col(val) - F.col("__prev"))).alias("d"))
-        .first()
+        dang = contribs.agg(
+            (F.lit(float(n)) - F.coalesce(F.sum("recv"), F.lit(0.0))).alias(
+                "dangling"
+            )
+        )
+        new = (
+            pv.join(contribs, "vertex", "left")
+            .crossJoin(dang)
+            .select(
+                "vertex",
+                (
+                    F.lit(1.0 - damping) * F.col("p")
+                    + F.lit(damping)
+                    * (
+                        F.coalesce("recv", F.lit(0.0))
+                        + F.col("dangling") * F.col("p") / F.lit(float(n))
+                    )
+                ).alias("rank"),
+            )
+            .localCheckpoint(eager=False)
+        )
+        if tol is None:
+            return new, None
+        delta = (
+            new.join(ranks.withColumnRenamed("rank", "__prev"), "vertex")
+            .agg(F.sum(F.abs(F.col("rank") - F.col("__prev"))).alias("d"))
+            .filter(F.col("d") >= tol)
+        )
+        return new, delta
+
+    ranks = pv.select("vertex", F.col("p").alias("rank")).localCheckpoint(
+        eager=False
     )
-    return float(row["d"] or 0.0)
+    return _supersteps(step, ranks, iters)
 
 
 def pagerank(
@@ -232,64 +301,10 @@ def pagerank(
 
     Returns ``(vertex, rank)``.
     """
-    # the edge list and out-degrees are loop-invariant: checkpoint them
-    # ONCE so each power-iteration round reads materialized blocks —
-    # without the barrier every round's plan re-runs the source scan,
-    # the distinct shuffle, and the degree groupBy (r14 optimization
-    # round, the same discipline connected_components already applies)
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
+    e, verts, n = _directed(edges, src, dst)
+    return _power_iteration(
+        e, verts.withColumn("p", F.lit(1.0)), n, damping, iters, tol
     )
-    verts = (
-        e.select(F.col("u").alias("vertex"))
-        .union(e.select(F.col("v").alias("vertex")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    n = verts.count()
-    outdeg = e.groupBy(F.col("u").alias("vertex")).agg(
-        F.count(F.lit(1)).alias("outdeg")
-    ).localCheckpoint(eager=False)
-    ranks = verts.withColumn("rank", F.lit(1.0)).localCheckpoint(eager=False)
-    for _ in range(iters):
-        contribs = (
-            e.join(ranks, e["u"] == ranks["vertex"], "inner")
-            .join(outdeg, "vertex", "inner")
-            .select(F.col("v").alias("vertex"), (F.col("rank") / F.col("outdeg")).alias("c"))
-            .groupBy("vertex")
-            .agg(F.sum("c").alias("recv"))
-        )
-        # dangling mass (rank not passed along any edge): carried as a lazy
-        # 1-row aggregate crossJoined in, NOT collected to the driver — the
-        # whole iteration stays one distributed plan, materialized once by
-        # the checkpoint. Ranks sum to n each round.
-        dang = contribs.agg(
-            (F.lit(float(n)) - F.coalesce(F.sum("recv"), F.lit(0.0))).alias(
-                "dangling"
-            )
-        )
-        prev = ranks
-        ranks = (
-            verts.join(contribs, "vertex", "left")
-            .crossJoin(dang)
-            .select(
-                "vertex",
-                (
-                    F.lit(1.0 - damping)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce("recv", F.lit(0.0))
-                        + F.col("dangling") / F.lit(float(n))
-                    )
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        if tol is not None and _l1_delta(ranks, prev, "rank") < tol:
-            break
-    return ranks
 
 
 def bfs_levels(
@@ -307,50 +322,38 @@ def bfs_levels(
     The scale-standard iterative frontier program: per level, ONE join
     (frontier → out-neighbors) plus one LEFT ANTI against the visited set;
     both are equi-joins Catalyst plans freely (a small frontier
-    broadcasts).  Visited/frontier are ``localCheckpoint``-ed per round so
-    round k never re-executes rounds 1..k-1.  Terminates on an empty
-    frontier (one scalar count per round) or ``max_hops``.
+    broadcasts).  Each hop's frontier is ``localCheckpoint``-ed, and the
+    result (which doubles as the visited set) is a flat union of those
+    frontiers, so round k never re-executes rounds 1..k-1.  Terminates on an empty
+    frontier (the round's ``isEmpty`` probe) or ``max_hops``.
 
     Returns ``(vertex, level)`` with level 0 for the sources — the
     reachability/radius primitive the reference's join-only traversal
     cannot express (its MATCH is fixed-length).
     """
-    # checkpoints are LAZY and the visited set is NEVER re-checkpointed
-    # (r14 optimization round): each hop's `isEmpty` check materializes
-    # that hop's frontier checkpoint as a side effect (one driver
-    # round-trip per hop instead of three), and the visited/result
-    # frames are flat unions of the per-hop checkpointed frontiers —
-    # plan depth stays bounded by max_hops with nothing re-executed
-    # (A/B at sf0.1 on the region graph: best 1.69 -> 1.16 s,
-    # outputs identical).
     frontier = sources.select(
         F.col(vertex_col).alias("vertex")
     ).distinct().localCheckpoint(eager=False)
-    levels = [frontier.withColumn("level", F.lit(0))]
-    visited = frontier
     # loop-invariant edge list materialized once: otherwise every hop's
-    # plan replays the caller's edge construction (scans, unions,
-    # projections) from scratch (r14 optimization round)
+    # plan replays the caller's edge construction
     out = edges.select(
         F.col(src).alias("u"), F.col(dst).alias("v")
     ).localCheckpoint(eager=False)
-    for hop in range(1, max_hops + 1):
+
+    def step(state):
+        hop, frontier, levels = state
         nxt = (
             out.join(frontier.withColumnRenamed("vertex", "u"), "u")
             .select(F.col("v").alias("vertex"))
             .distinct()
-            .join(visited, "vertex", "left_anti")
+            .join(levels.select("vertex"), "vertex", "left_anti")
             .localCheckpoint(eager=False)
         )
-        if nxt.isEmpty():
-            break
-        levels.append(nxt.withColumn("level", F.lit(hop)))
-        visited = visited.unionByName(nxt)
-        frontier = nxt
-    result = levels[0]
-    for lv in levels[1:]:
-        result = result.unionByName(lv)
-    return result
+        levels = levels.unionByName(nxt.withColumn("level", F.lit(hop + 1)))
+        return (hop + 1, nxt, levels), nxt
+
+    start = (0, frontier, frontier.withColumn("level", F.lit(0)))
+    return _supersteps(step, start, max_hops)[2]
 
 
 def triangle_counts(
@@ -450,17 +453,17 @@ def k_core(
     dense-region extractor (spam farms, tightly-duplicated doc clusters,
     collaboration cores).
 
-    Iterative peeling as a frontier program: each round recomputes degrees
-    over the surviving edge set and drops vertices below ``k``; runs to
-    the FIXPOINT (each non-converged round strictly shrinks the edge set,
-    so termination is guaranteed in ≤ peel-depth rounds — long chains
-    peel one layer per round).  ``max_iters`` is an optional safety
-    valve: if given and exhausted before the fixpoint, this RAISES
-    instead of returning a set that violates the core invariant (r5
-    advice: a silent cap could hand back vertices with in-set degree
-    < k).  Per round: one groupBy + one semi-join pair,
-    ``localCheckpoint``-ed so round i never replays rounds 1..i-1 — the
-    same scale discipline as :func:`connected_components`.
+    Iterative peeling as a frontier program: each round drops the
+    vertices below ``k`` and recomputes degrees over the surviving edge
+    set; the round's probe asks whether any vertex still has in-set
+    degree < ``k``.  Runs to the FIXPOINT (each non-converged round
+    strictly shrinks the edge set, so termination is guaranteed in ≤
+    peel-depth rounds — long chains peel one layer per round).
+    ``max_iters`` is an optional safety valve: if given and exhausted
+    before the fixpoint, this RAISES instead of returning a set that
+    violates the core invariant (a silent cap could hand back vertices
+    with in-set degree < k).  Per round: one groupBy + one semi-join
+    pair, ``localCheckpoint``-ed so round i never replays rounds 1..i-1.
 
     Returns ``(vertex, core_degree)`` — the surviving vertices and their
     degree inside the core (≥ k by construction; empty if no k-core).
@@ -474,38 +477,29 @@ def k_core(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    rounds = 0
-    while True:
-        deg = (
-            edges.select(F.col("a").alias("u"))
-            .unionByName(edges.select(F.col("b").alias("u")))
-            .groupBy("u")
-            .agg(F.count(F.lit(1)).alias("d"))
+
+    def degree(edges):
+        return (
+            edges.select(F.col("a").alias("vertex"))
+            .unionByName(edges.select(F.col("b").alias("vertex")))
+            .groupBy("vertex")
+            .agg(F.count(F.lit(1)).alias("core_degree"))
+            .localCheckpoint(eager=False)
         )
-        keep = deg.filter(F.col("d") >= k).select("u").localCheckpoint(eager=False)
+
+    def step(state):
+        edges, deg = state
+        keep = deg.filter(F.col("core_degree") >= k).select("vertex")
         pruned = (
-            edges.join(keep.withColumnRenamed("u", "a"), "a", "left_semi")
-            .join(keep.withColumnRenamed("u", "b"), "b", "left_semi")
+            edges.join(keep.withColumnRenamed("vertex", "a"), "a", "left_semi")
+            .join(keep.withColumnRenamed("vertex", "b"), "b", "left_semi")
             .select("a", "b")
             .localCheckpoint(eager=False)
         )
-        converged = pruned.count() == edges.count()
-        edges = pruned
-        rounds += 1
-        if converged:
-            break
-        if max_iters is not None and rounds >= max_iters:
-            raise RuntimeError(
-                f"k_core did not reach its fixpoint within max_iters="
-                f"{max_iters} rounds; pass max_iters=None to peel to "
-                f"convergence"
-            )
-    return (
-        edges.select(F.col("a").alias("vertex"))
-        .unionByName(edges.select(F.col("b").alias("vertex")))
-        .groupBy("vertex")
-        .agg(F.count(F.lit(1)).alias("core_degree"))
-    )
+        deg = degree(pruned)
+        return (pruned, deg), deg.filter(F.col("core_degree") < k)
+
+    return _supersteps(step, (edges, degree(edges)), max_iters, "k_core")[1]
 
 
 def sssp(
@@ -522,67 +516,51 @@ def sssp(
     (:func:`bfs_levels` is the unit-weight special case).
 
     Per round: one equi-join (current distances → out-edges), a
-    ``groupBy(vertex).min`` merge with the previous distances, and a
-    scalar improvement count for termination; frames are
-    ``localCheckpoint``-ed so round k never replays rounds 1..k-1.
+    ``groupBy(vertex).min`` merge with the previous distances, and an
+    ``isEmpty`` probe of the improved vertices for termination; frames
+    are ``localCheckpoint``-ed so round k never replays rounds 1..k-1.
     Converges in ≤ diameter rounds on non-negative weights; ``max_iters``
-    bounds adversarial inputs (negative-cycle graphs are out of scope).
+    bounds adversarial inputs (negative-cycle graphs are out of scope)
+    and RAISES when exhausted with distances still improving — partial
+    distances are wrong answers, not approximations.
 
     Returns ``(vertex, dist)`` for every reachable vertex (0 at sources).
     Integer-valued weights keep the fp path sums exact, so a SQL oracle
     (recursive CTE on a DAG) matches bit-for-bit.
     """
-    # checkpoints are LAZY (r14 optimization round): the per-round
-    # `improved` count materializes `merged` as a side effect, so the
-    # eager checkpoint's extra scheduling round-trip per round was pure
-    # overhead (A/B at sf0.1: best 2.46 -> 1.87 s, outputs identical)
     # loop-invariant edge list materialized once (see bfs_levels)
     out = edges.select(
         F.col(src).alias("u"), F.col(dst).alias("v"), F.col(weight).alias("w")
     ).localCheckpoint(eager=False)
-    # seed with the 1-hop relaxation (r14, the connected_components seed
-    # discipline): the init pays one join + min-merge — exactly what
-    # round 1 would compute — so the loop starts one round ahead and
-    # skips that round's convergence-count action (A/B at sf0.1:
-    # best 1.07 -> 0.85 s, distances identical)
+
+    def relax(dist):
+        hop = (
+            dist.withColumnRenamed("vertex", "u")
+            .join(out, "u")
+            .select(F.col("v").alias("vertex"), (F.col("dist") + F.col("w")).alias("dist"))
+        )
+        return (
+            dist.unionByName(hop)
+            .groupBy("vertex")
+            .agg(F.min("dist").alias("dist"))
+            .localCheckpoint(eager=False)
+        )
+
+    def step(dist):
+        merged = relax(dist)
+        improved = merged.join(
+            dist.withColumnRenamed("dist", "old"), "vertex", "left"
+        ).filter(F.col("old").isNull() | (F.col("dist") < F.col("old")))
+        return merged, improved
+
+    # seeded with the sources' 1-hop relaxation, so the first checked
+    # round is already round 2
     src0 = (
         sources.select(F.col(vertex_col).alias("vertex"))
         .distinct()
         .withColumn("dist", F.lit(0.0))
     )
-    hop1 = (
-        src0.withColumnRenamed("vertex", "u")
-        .join(out, "u")
-        .select(F.col("v").alias("vertex"), (F.col("dist") + F.col("w")).alias("dist"))
-    )
-    dist = (
-        src0.unionByName(hop1)
-        .groupBy("vertex")
-        .agg(F.min("dist").alias("dist"))
-        .localCheckpoint(eager=False)
-    )
-    for _ in range(max_iters):
-        relaxed = (
-            dist.withColumnRenamed("vertex", "u")
-            .join(out, "u")
-            .select(F.col("v").alias("vertex"), (F.col("dist") + F.col("w")).alias("dist"))
-        )
-        merged = (
-            dist.unionByName(relaxed)
-            .groupBy("vertex")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
-        )
-        improved = (
-            merged.join(dist.withColumnRenamed("dist", "old"), "vertex", "left")
-            .filter(F.col("old").isNull() | (F.col("dist") < F.col("old")))
-            .limit(1)
-            .count()
-        )
-        dist = merged
-        if improved == 0:
-            break
-    return dist
+    return _supersteps(step, relax(src0), max_iters, "sssp")
 
 
 def personalized_pagerank(
@@ -620,24 +598,11 @@ def personalized_pagerank(
     stop when a round's L1 rank delta < ``tol``; ``None`` (default) runs
     exactly ``iters`` rounds (the oracle-pinned mode).
     """
-    # loop-invariant frames checkpointed once per fit (see pagerank)
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
     s = sources.select(F.col(vertex_col).alias("vertex")).distinct()
     n_src = s.count()
     if n_src == 0:
         raise ValueError("personalized_pagerank needs a non-empty source set")
-    verts = (
-        e.select(F.col("u").alias("vertex"))
-        .union(e.select(F.col("v").alias("vertex")))
-        .union(s)
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    n = verts.count()
+    e, verts, n = _directed(edges, src, dst, s)
     pv = (
         verts.join(s.withColumn("__s", F.lit(True)), "vertex", "left")
         .select(
@@ -648,46 +613,7 @@ def personalized_pagerank(
         )
         .localCheckpoint(eager=False)
     )
-    outdeg = e.groupBy(F.col("u").alias("vertex")).agg(
-        F.count(F.lit(1)).alias("outdeg")
-    ).localCheckpoint(eager=False)
-    ranks = pv.select("vertex", F.col("p").alias("rank")).localCheckpoint(eager=False)
-    for _ in range(iters):
-        contribs = (
-            e.join(ranks, e["u"] == ranks["vertex"], "inner")
-            .join(outdeg, "vertex", "inner")
-            .select(
-                F.col("v").alias("vertex"),
-                (F.col("rank") / F.col("outdeg")).alias("c"),
-            )
-            .groupBy("vertex")
-            .agg(F.sum("c").alias("recv"))
-        )
-        dang = contribs.agg(
-            (F.lit(float(n)) - F.coalesce(F.sum("recv"), F.lit(0.0))).alias(
-                "dangling"
-            )
-        )
-        prev = ranks
-        ranks = (
-            pv.join(contribs, "vertex", "left")
-            .crossJoin(dang)
-            .select(
-                "vertex",
-                (
-                    F.lit(1.0 - damping) * F.col("p")
-                    + F.lit(damping)
-                    * (
-                        F.coalesce("recv", F.lit(0.0))
-                        + F.col("dangling") * F.col("p") / F.lit(float(n))
-                    )
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        if tol is not None and _l1_delta(ranks, prev, "rank") < tol:
-            break
-    return ranks
+    return _power_iteration(e, pv, n, damping, iters, tol)
 
 
 def label_propagation(
@@ -715,14 +641,14 @@ def label_propagation(
     k never replays earlier rounds.  Returns ``(vertex, label)``.
 
     ``stop_when_stable``: early exit when a round changes NO label
-    (``iters`` becomes the cap; the check is one anti-join ``limit(1)``
-    count per round).  Off by default — the oracle-pinned mode runs
-    exactly ``iters`` rounds.  r7: checks that can never save work are
+    (``iters`` becomes the cap; the check is one anti-join ``isEmpty``
+    probe per round).  Off by default — the oracle-pinned mode runs
+    exactly ``iters`` rounds.  Checks that can never save work are
     skipped — after the FINAL round (nothing left to exit early from)
     and after round 1 (in a symmetrized pair graph every vertex has a
     neighbor and adopts the neighborhood min ≠ its own fresh id, so
-    round 1 always changes labels).  Each remaining check is a count
-    ACTION: worth it only when the cap comfortably exceeds the expected
+    round 1 always changes labels).  Each remaining check is an ACTION:
+    worth it only when the cap comfortably exceeds the expected
     convergence round, a pure loss at a tight cap (measured 6.7s vs
     5.3s at iters=3 on the sf0.1 LSH pair graph — which is why
     q_dup_clusters does not use it).
@@ -730,48 +656,38 @@ def label_propagation(
     ``presymmetrized``: see :func:`connected_components` — skip the
     symmetrize-distinct pass when the caller already materialized it.
     """
-    from pyspark.sql import Window
-
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    # non-presymmetrized path checkpoints the symmetrize-distinct ONCE
-    # (the connected_components discipline) — otherwise every round's
-    # join replays it; presymmetrized callers already materialized theirs
+    # the symmetrize-distinct is checkpointed ONCE, or every round's join
+    # replays it; presymmetrized callers already materialized theirs
     e = (
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         if presymmetrized
         else _sym_edges(pairs, src, dst).localCheckpoint(eager=False)
     )
     verts = e.select(F.col("u").alias("vertex")).distinct().localCheckpoint(eager=False)
-    labels = verts.withColumn("label", F.col("vertex"))
-    for it in range(iters):
-        counts = (
+    w = Window.partitionBy("vertex").orderBy(F.desc("cnt"), F.asc("label"))
+
+    def step(state):
+        it, labels = state
+        new = (
             e.join(labels.withColumnRenamed("vertex", "u"), "u")
             .groupBy(F.col("v").alias("vertex"), "label")
             .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        w = Window.partitionBy("vertex").orderBy(
-            F.desc("cnt"), F.asc("label")
-        )
-        prev = labels
-        labels = (
-            counts.withColumn("__rn", F.row_number().over(w))
+            .withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .select("vertex", "label")
             .localCheckpoint(eager=False)
         )
+        changed = None
         if stop_when_stable and 0 < it < iters - 1:
-            changed = (
-                labels.join(
-                    prev.withColumnRenamed("label", "__old"), "vertex", "inner"
-                )
-                .filter(F.col("label") != F.col("__old"))
-                .limit(1)
-                .count()
-            )
-            if changed == 0:
-                break
-    return labels
+            changed = new.join(
+                labels.withColumnRenamed("label", "__old"), "vertex"
+            ).filter(F.col("label") != F.col("__old"))
+        return (it + 1, new), changed
+
+    start = (0, verts.withColumn("label", F.col("vertex")))
+    return _supersteps(step, start, iters)[1]
 
 
 def hits(
@@ -791,56 +707,37 @@ def hits(
     destination groupBys, checkpointed.  Returns
     ``(vertex, hub, authority)``; sinks hold hub 0, sources authority 0.
     """
-    # loop-invariant edge list checkpointed once per fit (see pagerank)
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    verts = (
-        e.select(F.col("u").alias("vertex"))
-        .union(e.select(F.col("v").alias("vertex")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    n = verts.count()
-    hubs = verts.withColumn("hub", F.lit(1.0)).localCheckpoint(eager=False)
-    auths = verts.withColumn("authority", F.lit(1.0))
-    for _ in range(iters):
-        a_raw = (
-            e.join(hubs.withColumnRenamed("vertex", "u"), "u")
-            .groupBy(F.col("v").alias("vertex"))
-            .agg(F.sum("hub").alias("raw"))
+    e, verts, n = _directed(edges, src, dst)
+
+    def half(vec, frm, to, out):
+        # every `to` endpoint sums the `frm` endpoints' scores, rescaled
+        raw = (
+            e.join(vec.toDF(frm, "__in"), frm)
+            .groupBy(F.col(to).alias("vertex"))
+            .agg(F.sum("__in").alias("raw"))
         )
-        a_tot = a_raw.agg(F.sum("raw").alias("tot"))
-        auths = (
-            verts.join(a_raw, "vertex", "left")
-            .crossJoin(a_tot)
+        tot = raw.agg(F.sum("raw").alias("tot"))
+        return (
+            verts.join(raw, "vertex", "left")
+            .crossJoin(tot)
             .select(
                 "vertex",
                 (
                     F.coalesce("raw", F.lit(0.0)) * F.lit(float(n)) / F.col("tot")
-                ).alias("authority"),
+                ).alias(out),
             )
             .localCheckpoint(eager=False)
         )
-        h_raw = (
-            e.join(auths.withColumnRenamed("vertex", "v"), "v")
-            .groupBy(F.col("u").alias("vertex"))
-            .agg(F.sum("authority").alias("raw"))
-        )
-        h_tot = h_raw.agg(F.sum("raw").alias("tot"))
-        hubs = (
-            verts.join(h_raw, "vertex", "left")
-            .crossJoin(h_tot)
-            .select(
-                "vertex",
-                (
-                    F.coalesce("raw", F.lit(0.0)) * F.lit(float(n)) / F.col("tot")
-                ).alias("hub"),
-            )
-            .localCheckpoint(eager=False)
-        )
+
+    def step(state):
+        auths = half(state[0], "u", "v", "authority")
+        return (half(auths, "v", "u", "hub"), auths), None
+
+    start = (
+        verts.withColumn("hub", F.lit(1.0)).localCheckpoint(eager=False),
+        verts.withColumn("authority", F.lit(1.0)),
+    )
+    hubs, auths = _supersteps(step, start, iters)
     return hubs.join(auths, "vertex")
 
 

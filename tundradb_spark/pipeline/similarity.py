@@ -1330,10 +1330,13 @@ def load_quantizer(path: str, spark=None) -> dict | None:
         raise ValueError(
             f"load_quantizer needs a SparkSession for non-local path {path!r}"
         )
-    try:
-        rows = spark.read.text(path.rstrip("/") + "/" + _QUANTIZER_DIR).collect()
-    except Exception:
+    # existence through the Hadoop FS; a sidecar that exists but cannot be
+    # read raises instead of passing for "no quantizer"
+    p = path.rstrip("/") + "/" + _QUANTIZER_DIR
+    hp = spark._jvm.org.apache.hadoop.fs.Path(p)
+    if not hp.getFileSystem(spark._jsc.hadoopConfiguration()).exists(hp):
         return None
+    rows = spark.read.text(p).collect()
     return json.loads(rows[0]["value"]) if rows else None
 
 

@@ -703,16 +703,13 @@ def stream_ingest_dedup(
                 )
         epoch_dir = HPath(f"{sig_path}/epoch={epoch}")
         sig_fs.delete(epoch_dir, True)
-        # bootstrap probe: try/except the read, NOT a driver-local glob —
-        # sig_path may be any Hadoop filesystem (s3a://, hdfs://), where a
-        # local listing would silently disable corpus dedup forever
-        try:
-            corpus_cols = spark.read.parquet(sig_path).columns
-            have_corpus = True
-        except Exception:
-            have_corpus = False
+        # bootstrap: the corpus is the PRIOR epochs' partitions, found by
+        # the Hadoop FS listing above (sig_path may be s3a://, hdfs://).
+        # Any failure to read them raises — treating an unreadable corpus
+        # as "no corpus" would silently admit this epoch's duplicates
+        have_corpus = bool(present - {epoch})
         survivors = batch
-        if have_corpus and "band_key" not in corpus_cols:
+        if have_corpus and "band_key" not in spark.read.parquet(sig_path).columns:
             # pre-r6 flat layout ((id, sig) rows, epoch-only partitions):
             # refuse loudly with the migration step instead of dying on an
             # unresolved-column AnalysisException mid-stream
